@@ -28,9 +28,11 @@ partitioned by bucket so the mechanism is identical and testable locally.
 
 from __future__ import annotations
 
+import contextlib
 import json
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -145,18 +147,6 @@ def _make_extract_batch(pkg_root: str, columns: list,
     return _extract_batch
 
 
-_extract_udf = F.pandas_udf(
-    _make_extract_batch(_PKG_ROOT, [f.name for f in _EXTRACT_FIELDS]),
-    returnType=EXTRACT_STRUCT,
-)
-
-_extract_udf_extended = F.pandas_udf(
-    _make_extract_batch(_PKG_ROOT, [f.name for f in _EXTRACT_FIELDS],
-                        extended_filters=True),
-    returnType=EXTRACT_STRUCT,
-)
-
-
 # -----------------------------------------------------------------------------
 # pipeline stages (each is a pure DataFrame -> DataFrame function)
 
@@ -254,7 +244,15 @@ def extract(pages: DataFrame, extended_filters: bool = False) -> DataFrame:
     ``extended_filters``: opt out of strict filter parity — decode
     LZW/ASCIIHex/ASCII85/RunLength/filter-chain streams the reference
     drops (more yield, no longer byte-identical per url on those docs)."""
-    udf = _extract_udf_extended if extended_filters else _extract_udf
+    # a new UDF per call: a UDF object builds its JVM twin on first use
+    # and keeps it, and the twin holds the accumulator handle of the
+    # SparkContext active then; a module-level UDF would send a later
+    # context's accumulator updates to a stopped one's closed socket
+    udf = F.pandas_udf(
+        _make_extract_batch(_PKG_ROOT, [f.name for f in _EXTRACT_FIELDS],
+                            extended_filters=extended_filters),
+        returnType=EXTRACT_STRUCT,
+    )
     return (
         pages.withColumn("doc", udf(F.col("html")))
         .withColumn("bytes_in", F.length("html"))
@@ -435,12 +433,18 @@ def run_pipeline_bucketed(
 
 
 def committed_buckets(spark: SparkSession, checkpoint_path: str) -> DataFrame:
+    """The committed bucket ids.  A missing checkpoint means none are
+    committed; any other read error (a corrupt checkpoint file) raises
+    rather than silently re-processing every bucket.  The explicit schema
+    skips the schema-inference job, and the empty result is a JVM-only
+    Range, so neither branch starts a Python task."""
     try:
-        return spark.read.parquet(checkpoint_path).select("bucket").distinct()
-    except Exception:
-        return spark.createDataFrame(
-            [], T.StructType([T.StructField("bucket", T.IntegerType())])
-        )
+        df = spark.read.schema("bucket int").parquet(checkpoint_path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        df = spark.range(0).select(F.col("id").cast("int").alias("bucket"))
+    return df.distinct()
 
 
 def resume_filter(
@@ -452,6 +456,17 @@ def resume_filter(
     return pages_bucketed.join(F.broadcast(done), "bucket", "left_anti")
 
 
+@contextlib.contextmanager
+def _session_conf(spark: SparkSession, key: str, value: str):
+    """Set a SQL conf for the enclosed calls only."""
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
 def run_resumable(
     spark: SparkSession,
     pages: DataFrame,
@@ -459,10 +474,30 @@ def run_resumable(
     checkpoint_path: str,
     metrics_path: str | None = None,
     n_buckets: int = 64,
-    partitions: int = 32,
 ) -> None:
     """Resumable run: skip committed buckets, write results/metrics with
     DYNAMIC partition overwrite keyed by bucket, then commit the buckets.
+
+    One extraction pass in four steps:
+
+    1. collect the committed bucket ids to the driver; if they cover all
+       ``n_buckets``, return without reading ``pages``;
+    2. filter ``pages`` to the remaining buckets by that id list (the
+       filter reaches below the dedup window, so committed payloads are
+       not shuffled), extract them and persist the result;
+    3. persist the metrics aggregate over it; checking it for emptiness
+       materializes both caches, and an empty one (every remaining
+       bucket holds no pages) ends the run;
+    4. write results from the cached extraction, then metrics and the
+       checkpoint from the cached metrics.
+
+    Both persists run with ``canChangeCachedPlanOutputPartitioning`` on:
+    a cached plan's output partitioning is fixed when ``persist()`` builds
+    it, and with the conf off AQE may not coalesce the dedup window's
+    ``spark.sql.shuffle.partitions`` under the cache, so a small run
+    pays one Python task per shuffle partition and writes one file per
+    shuffle partition and bucket.  The conf is scoped to the persist
+    calls; other cached queries keep the session's setting.
 
     Idempotence under mid-run failure: a crash AFTER the results write but
     BEFORE the checkpoint commit means the restart re-processes those
@@ -470,31 +505,36 @@ def run_resumable(
     REPLACE the orphaned ones instead of appending duplicate rows (the
     exact failure window resume exists to cover).  On Iceberg the same
     contract is the atomic REPLACE of bucket(N, url) partitions."""
-    df = route(latest_snapshot(pages))
-    df = with_bucket(df, n_buckets)
-    todo = resume_filter(df, spark, checkpoint_path)
-    if todo.isEmpty():
+    done = {r.bucket for r in
+            committed_buckets(spark, checkpoint_path).collect()}
+    if done >= set(range(n_buckets)):
         return
-    # dedup window upstream -> keep its distribution (r03 skew policy;
-    # the resume anti-join is a broadcast and preserves partitioning)
-    ex = extract(todo)
-    # materialize extraction once for both sinks
-    ex = ex.persist()
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev_mode = spark.conf.get(mode_key, "static")
+    # dedup window upstream -> keep its distribution (r03 skew policy)
+    todo = with_bucket(route(latest_snapshot(pages)), n_buckets)
+    if done:
+        todo = todo.filter(~F.col("bucket").isin(sorted(done)))
+    with _session_conf(
+        spark, "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+        "true",
+    ):
+        ex = extract(todo).persist()
+        m = metrics(ex).persist()
     try:
-        spark.conf.set(mode_key, "dynamic")
-        results(ex).write.mode("overwrite").partitionBy("bucket").parquet(
-            results_path
-        )
-        m = metrics(ex)
-        if metrics_path:
-            m.withColumn("committed_ts", F.current_timestamp()).write.mode(
-                "overwrite"
-            ).partitionBy("bucket").parquet(metrics_path)
+        if m.isEmpty():
+            return
+        with _session_conf(
+            spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
+        ):
+            results(ex).write.mode("overwrite").partitionBy("bucket").parquet(
+                results_path
+            )
+            if metrics_path:
+                m.withColumn("committed_ts", F.current_timestamp()).write.mode(
+                    "overwrite"
+                ).partitionBy("bucket").parquet(metrics_path)
         m.select("bucket").write.mode("append").parquet(checkpoint_path)
     finally:
-        spark.conf.set(mode_key, prev_mode)
+        m.unpersist()
         ex.unpersist()
 
 

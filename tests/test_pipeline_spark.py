@@ -148,7 +148,7 @@ def test_resume_checkpoint(spark, pages_df):
         assert set(r.bucket for r in todo.select("bucket").distinct().collect()) == {4, 5, 6, 7}
 
         P.run_resumable(spark, pages_df, results_path, ckpt_path,
-                        n_buckets=8, partitions=4)
+                        n_buckets=8)
 
         # final results equal a clean full run (same rows)
         full_res, _ = P.run_pipeline(pages_df, n_buckets=8, partitions=4)
@@ -164,7 +164,7 @@ def test_resume_checkpoint(spark, pages_df):
         # a second resume is a no-op (nothing left)
         before = got.count()
         P.run_resumable(spark, pages_df, results_path, ckpt_path,
-                        n_buckets=8, partitions=4)
+                        n_buckets=8)
         assert spark.read.parquet(results_path).count() == before
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -193,7 +193,7 @@ def test_resume_idempotent_after_crash_window(spark, pages_df):
 
         # restart
         P.run_resumable(spark, pages_df, results_path, ckpt_path,
-                        n_buckets=8, partitions=4)
+                        n_buckets=8)
 
         got = spark.read.parquet(results_path)
         full_res, _ = P.run_pipeline(pages_df, n_buckets=8, partitions=4)
@@ -202,6 +202,126 @@ def test_resume_idempotent_after_crash_window(spark, pages_df):
         assert dups.count() == 0
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _tree(path):
+    """{relative file path: (size, mtime_ns)} under path."""
+    out = {}
+    for root, _, files in os.walk(path):
+        for f in files:
+            st = os.stat(os.path.join(root, f))
+            out[os.path.relpath(os.path.join(root, f), path)] = (
+                st.st_size, st.st_mtime_ns)
+    return out
+
+
+def test_resume_results_files_per_bucket(spark, pages_df):
+    """The persisted extraction keeps AQE's coalesced partitioning, so a
+    bucket's results are not split into one file per shuffle partition."""
+    from pypdfproc_spark.spark import pipeline as P
+
+    tmp = tempfile.mkdtemp(prefix="ckpt_files_")
+    results_path = os.path.join(tmp, "results")
+    try:
+        P.run_resumable(spark, pages_df, results_path,
+                        os.path.join(tmp, "ckpt"), n_buckets=8)
+        limit = spark.sparkContext.defaultParallelism
+        buckets = [d for d in os.listdir(results_path)
+                   if d.startswith("bucket=")]
+        assert len(buckets) == 8
+        for d in buckets:
+            parts = [f for f in os.listdir(os.path.join(results_path, d))
+                     if f.startswith("part-")]
+            assert 0 < len(parts) <= limit, (d, len(parts))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_resume_all_committed_never_reads_pages(spark, pages_df):
+    """A restart whose checkpoint covers every bucket returns before the
+    pages table is scanned: it succeeds even after the input is gone, and
+    rewrites nothing."""
+    from pypdfproc_spark.spark import pipeline as P
+
+    tmp = tempfile.mkdtemp(prefix="ckpt_gone_")
+    pages_path = os.path.join(tmp, "pages")
+    results_path = os.path.join(tmp, "results")
+    ckpt_path = os.path.join(tmp, "ckpt")
+    try:
+        pages_df.write.parquet(pages_path)
+        pages = spark.read.parquet(pages_path)
+        P.run_resumable(spark, pages, results_path, ckpt_path, n_buckets=8)
+        before = _tree(results_path)
+        assert before
+        for f in os.listdir(pages_path):
+            os.remove(os.path.join(pages_path, f))
+        P.run_resumable(spark, pages, results_path, ckpt_path, n_buckets=8)
+        assert _tree(results_path) == before
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_committed_buckets_missing_and_corrupt(spark, pages_df):
+    """A missing checkpoint is an empty, JVM-only bucket set; a corrupt one
+    raises instead of silently re-processing every bucket."""
+    from pypdfproc_spark.spark import pipeline as P
+
+    tmp = tempfile.mkdtemp(prefix="ckpt_bad_")
+    ckpt_path = os.path.join(tmp, "ckpt")
+    try:
+        empty = P.committed_buckets(spark, ckpt_path)
+        assert empty.collect() == []
+        plan = empty._jdf.queryExecution().executedPlan().toString()
+        assert "Range" in plan and "ExistingRDD" not in plan, plan
+
+        os.makedirs(ckpt_path)
+        with open(os.path.join(ckpt_path, "part-00000.parquet"), "wb") as f:
+            f.write(b"not a parquet file")
+        with pytest.raises(Exception, match="FAILED_READ_FILE"):
+            P.committed_buckets(spark, ckpt_path).collect()
+        with pytest.raises(Exception, match="FAILED_READ_FILE"):
+            P.run_resumable(spark, pages_df, os.path.join(tmp, "results"),
+                            ckpt_path, n_buckets=8)
+        assert not os.path.exists(os.path.join(tmp, "results"))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+_SESSION_RESTART_SCRIPT = """
+import datetime, sys
+sys.path.insert(0, %r)
+from fixtures.pagesgen import make_html
+from pypdfproc_spark.spark import pipeline as P
+from pypdfproc_spark.spark.session import build_session
+rows = [("u%%d" %% i, datetime.datetime(2024, 1, 1), make_html(i, "x"), None,
+         "en") for i in range(8)]
+for _ in range(2):
+    s = build_session(app="udf-restart", master="local[2]",
+                      shuffle_partitions=2)
+    s.sparkContext.setLogLevel("WARN")
+    df = s.createDataFrame(rows, P.PAGES_SCHEMA)
+    n = P.extract(P.route(df)).agg({"doc.n_pages": "sum"}).collect()[0][0]
+    print("pages", n, flush=True)
+    s.stop()
+"""
+
+
+def test_extract_udf_survives_session_restart():
+    """extract() in a second SparkContext of the same process must not
+    send accumulator updates to the first context's closed server."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _SESSION_RESTART_SCRIPT % repo],
+        capture_output=True, text=True, timeout=600, cwd=repo,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.split() == ["pages", "8", "pages", "8"], proc.stdout
+    for needle in ("Failed to update accumulator",
+                   "Python server acknowledged"):
+        assert needle not in proc.stderr, proc.stderr[-2000:]
 
 
 def test_bucketed_dedup_has_no_exchange(spark, pages_df):
